@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-import time
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -48,8 +47,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-_MANIFESTS_DIR_NAME = "_manifests"
-_DATA_DIR_NAME = "_data"
+from oakstore_spark import item_format
 
 _NAME_TO_SPARK = {
     "double": T.DoubleType(),
@@ -144,9 +142,7 @@ class OakStoreDataSource(DataSource):
                 "(normalize/cast upstream)"
             )
         item = base / "items" / key
-        if (item / _MANIFESTS_DIR_NAME).exists() or any(
-            item.glob("_oak_year=*")
-        ):
+        if item_format.is_manifest_item(item) or item_format.year_dirs(item):
             raise ValueError(f"key={key} already exists")
         return OakStoreBatchWriter(item, idx, _uuid.uuid4().hex, phys)
 
@@ -154,7 +150,7 @@ class OakStoreDataSource(DataSource):
         base = _base_option(self.options)
         key = self.options["key"].upper()
         item = base / "items" / key
-        if not (item / _MANIFESTS_DIR_NAME).is_dir():
+        if not item_format.is_manifest_item(item):
             raise ValueError(
                 "streaming CDC reads require commit_protocol='manifest' "
                 f"(item {key} has no manifest history)"
@@ -214,24 +210,13 @@ class OakStoreReader(DataSourceReader):
 
     def _year_dirs(self) -> list[Path]:
         """Live year dirs (manifest-aware), pruned by pushed-down bounds."""
-        manifests = self._item / "_manifests"
-        if manifests.is_dir():
-            versions = sorted(int(p.stem[1:]) for p in manifests.glob("v*.json"))
-            mapping = json.loads(
-                (manifests / f"v{versions[-1]:08d}.json").read_text()
-            )["years"]
-            dirs = [self._item / rel for _y, rel in sorted(mapping.items())]
-        else:
-            dirs = sorted(self._item.glob("_oak_year=*"))
-        out = []
-        for d in dirs:
-            year = int(d.name.split("=", 1)[1])
-            if self._lo is not None and year < self._lo.year:
-                continue
-            if self._hi is not None and year > self._hi.year:
-                continue
-            out.append(d)
-        return out
+        _, live = item_format.live_year_dirs(self._item)
+        return [
+            self._item / rel
+            for year, rel in sorted(live.items())
+            if (self._lo is None or int(year) >= self._lo.year)
+            and (self._hi is None or int(year) <= self._hi.year)
+        ]
 
     def partitions(self) -> list[InputPartition]:
         parts = [
@@ -339,8 +324,9 @@ class OakStoreStreamReader(SimpleDataSourceStreamReader):
     def _mapping(self, version: int) -> dict[str, str]:
         if version == 0:
             return {}
-        mpath = self._item / _MANIFESTS_DIR_NAME / f"v{version:08d}.json"
-        if not mpath.exists():
+        try:
+            return item_format.read_manifest(self._item, version)["years"]
+        except FileNotFoundError:
             # the checkpointed offset was vacuumed away — re-reading from
             # version 0 would silently re-emit the whole item as inserts,
             # so fail loudly; the operator restarts with a fresh
@@ -348,15 +334,10 @@ class OakStoreStreamReader(SimpleDataSourceStreamReader):
             raise ValueError(
                 f"manifest v{version} no longer exists (vacuumed); "
                 "restart the stream from a fresh checkpoint"
-            )
-        return json.loads(mpath.read_text())["years"]
+            ) from None
 
     def _latest_version(self) -> int:
-        versions = [
-            int(p.stem[1:])
-            for p in (self._item / _MANIFESTS_DIR_NAME).glob("v*.json")
-        ]
-        return max(versions, default=0)
+        return max(item_format.versions(self._item), default=0)
 
     def initialOffset(self) -> dict:  # noqa: N802 (API name)
         return {"version": 0}
@@ -443,7 +424,7 @@ class OakStoreBatchWriter(DataSourceArrowWriter):
     ):
         self._item = item_path
         self._idx = index_name
-        self._gen = gen
+        self._gen_dir = item_format.generation_dir(item_path, gen)
         self._physical = physical or {}
 
     def write(self, iterator):
@@ -469,7 +450,7 @@ class OakStoreBatchWriter(DataSourceArrowWriter):
         for y, tables in by_year.items():
             merged = pa.concat_tables(tables).sort_by(self._idx)
             fname = f"part-{_uuid.uuid4().hex}.parquet"
-            ydir = self._item / _DATA_DIR_NAME / self._gen / f"_oak_year={y}"
+            ydir = self._gen_dir / item_format.year_dir_name(y)
             ydir.mkdir(parents=True, exist_ok=True)
             pq.write_table(merged, str(ydir / fname), compression="snappy")
             out.append((int(y), fname))
@@ -478,31 +459,20 @@ class OakStoreBatchWriter(DataSourceArrowWriter):
     def commit(self, messages):
         years = sorted({y for m in messages if m for y, _f in m.years})
         mapping = {
-            str(y): f"{_DATA_DIR_NAME}/{self._gen}/_oak_year={y}" for y in years
+            str(y): (self._gen_dir / item_format.year_dir_name(y))
+            .relative_to(self._item)
+            .as_posix()
+            for y in years
         }
-        mdir = self._item / _MANIFESTS_DIR_NAME
-        mdir.mkdir(parents=True, exist_ok=True)
-        doc = {
-            "protocol": "manifest-v1",
-            "version": 1,
-            "years": mapping,
-            "operation": "bulk_write",
-            "committed_at": time.time(),
-        }
-        tmp = mdir / f".v00000001.json.{self._gen}.tmp"
-        tmp.write_text(json.dumps(doc, sort_keys=True))
+        self._item.mkdir(parents=True, exist_ok=True)
         try:
-            import os
-
-            os.link(tmp, mdir / "v00000001.json")  # put-if-absent
+            item_format.write_manifest(self._item, 1, mapping, "bulk_write")
         except FileExistsError:
             raise RuntimeError(
                 f"item {self._item.name} was created concurrently"
             ) from None
-        finally:
-            tmp.unlink(missing_ok=True)
 
     def abort(self, messages):
         import shutil
 
-        shutil.rmtree(self._item / _DATA_DIR_NAME / self._gen, ignore_errors=True)
+        shutil.rmtree(self._gen_dir, ignore_errors=True)

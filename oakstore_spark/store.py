@@ -18,19 +18,26 @@ Deliberate, documented deviations from the reference (SURVEY.md §4):
   not on full row values ignoring the index (store.py:229-230);
 - an unbounded query has no upper bound (the reference defaults end to
   ``datetime.now()``, silently hiding future-dated rows, store.py:253);
-- append rewrites via write-temp-then-swap so a crash cannot corrupt the
-  item (the reference overwrites in place, store.py:231-236).
+- every mutation stages its replacement before publishing it, so a
+  crash cannot corrupt the item (the reference overwrites in place,
+  store.py:231-236).
 
-Commit protocols (EXT): ``commit_protocol="rename"`` (default) uses the
-local-FS atomic directory swap above. ``commit_protocol="manifest"``
-uses a Delta-style manifest log instead: every write/append/compact
-lands files in a fresh immutable ``_data/<generation>/`` directory and
-then publishes ONE new ``_manifests/vNNNNNNNN.json`` mapping each year
-to its current directory — the single-object write that IS the commit,
-which is atomic on object storage (S3/GCS PUT) where directory renames
-are not. Readers resolve the latest manifest; superseded generations
-stay readable until ``vacuum()``. Items self-describe their protocol
-(presence of ``_manifests/``), so any Store instance reads both.
+Mutations (append, upsert, compact, delete_where, delete_range) are one
+sequence: resolve the item's live year dirs, build the replacement
+relation for the years it touches, stage it where no reader looks, then
+publish. Two commit protocols (EXT) differ only in the staging location
+and the publish step; ``item_format`` holds the on-disk layout of both.
+``commit_protocol="rename"`` (default, local FS) stages in a hidden
+``.tmp-KEY-*`` sibling and publishes by swapping the touched year dirs
+in, after journaling the swap so an interrupted one is completed by
+the item's next mutation or by ``vacuum()``. ``commit_protocol="manifest"``
+stages a fresh immutable ``_data/<generation>/`` and publishes ONE new
+``_manifests/vNNNNNNNN.json`` mapping each year to its live dir — a
+single-object put-if-absent that is atomic on object storage (S3/GCS
+conditional PUT) where directory renames are not. Superseded
+generations stay readable (time travel) until ``vacuum()``. Items
+self-describe their protocol (presence of ``_manifests/``), so any Store
+instance reads both.
 
 Scale design (100 TB): each item is a Parquet table hive-partitioned by
 ``_oak_year=YYYY`` with files sorted by the index column, so a time-range
@@ -52,6 +59,7 @@ import time
 import uuid
 from datetime import datetime
 from pathlib import Path
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -59,19 +67,30 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oakstore_spark import item_format
 from oakstore_spark.errors import ConcurrentCommitError, ItemKeyError, SchemaError
+from oakstore_spark.item_format import PARTITION_COL as _PARTITION_COL
 from oakstore_spark.schema import DEFAULT_COLUMN_SCHEMA, DEFAULT_INDEX_NAME, Metadata
 from oakstore_spark.session import get_spark
 
 _KEY_REGEX = re.compile(r"^[-a-zA-Z0-9_.]+\Z")  # parity: store.py:28
 _ITEMS_DIR = "items"  # parity: store.py:29
 _METADATA_FILE = "_metadata.json"
-_PARTITION_COL = "_oak_year"
 _MAX_RECORDS_PER_FILE = 1_000_000  # parity: store.py:27 (_DEFAULT_CHUNK_SIZE)
-_MANIFESTS_DIR = "_manifests"  # manifest-protocol commit log
-_DATA_DIR = "_data"  # manifest-protocol immutable generations
+_COMMIT_ATTEMPTS = 5  # manifest publishes lost to a racing writer, then give up
 _TXNS_DIR = "_txns"  # store-level multi-item transaction objects
 _TXN_CHECKPOINT = "_checkpoint"  # highest fully-processed txn id
+
+
+class _Staged(NamedTuple):
+    """A mutation's replacement, written but not yet visible. Publishing
+    it replaces each live year by the year dir staged under ``dir``, and
+    drops each year of ``touched`` that has none (every row was deleted).
+    ``n`` is what the mutation returns: rows deleted, years compacted."""
+
+    dir: Path
+    touched: tuple[str, ...] = ()
+    n: int = 0
 
 
 class Item:
@@ -263,7 +282,6 @@ class Store:
         uncastable value raises SchemaError at action time via a guarded
         cast — kept lazy and distributed (no extra validation pass).
         """
-        idx = self._metadata.index_name
         if isinstance(data, pd.DataFrame):
             return self._normalize_pandas(data)
         if isinstance(data, DataFrame):
@@ -476,22 +494,182 @@ class Store:
             .parquet(str(path), mode="errorifexists")
         )
 
-    # -- manifest protocol (EXT) --------------------------------------------
+    # -- resolve → stage → publish: the one mutation sequence ---------------
+
+    def _existing(self, key: str) -> Path:
+        path = self._item_path(key)
+        if not path.exists():
+            raise ValueError(f"key={key.upper()} does not exist")
+        return path
+
+    # (version, {year: live dir relative to the item}) of either protocol
+    _latest_manifest = staticmethod(item_format.live_year_dirs)
+
+    def _manifest_paths(self, path: Path, mapping: dict[str, str]) -> list[str]:
+        """Absolute dirs of a {year: dir relative to the item} mapping."""
+        return [str(path / rel) for _, rel in sorted(mapping.items())]
+
+    def _read(
+        self,
+        path: Path,
+        dirs: list[str],
+        start: datetime | None = None,
+        end: datetime | None = None,
+    ) -> DataFrame:
+        """The one read of item data: Parquet ``dirs`` (or files) of the
+        item at ``path`` under the declared schema, restricted to
+        ``start <= index <= end`` (inclusive, either bound optional),
+        aliased to the logical column names with read-time defaults
+        filled, projected to the index plus the declared columns."""
+        if not dirs:
+            return self._empty_item_df()
+        idx = self._metadata.index_name
+        reader = self._spark.read.schema(self._declared_read_schema())
+        # year dirs that all sit directly in the item (the rename layout)
+        # are read as its partitions, so the year bound is a partition
+        # filter in the plan; generations of a manifest item have no
+        # common root, and their years were pruned from ``dirs`` already
+        partitioned = all(Path(d).parent == path for d in dirs)
+        if partitioned:
+            reader = reader.option("basePath", str(path))
+        raw = reader.parquet(*dirs)
+        year = F.col(_PARTITION_COL)
+        if start is not None:
+            raw = raw.where(F.col(idx) >= F.lit(start))
+            if partitioned:
+                raw = raw.where(year >= start.year)
+        if end is not None:
+            raw = raw.where(F.col(idx) <= F.lit(end))
+            if partitioned:
+                raw = raw.where(year <= end.year)
+        return self._fill_defaults(raw).select(idx, *self._metadata.column_schema)
+
+    def _stage(
+        self,
+        path: Path,
+        sdf: DataFrame,
+        cluster_by: list[str] | None = None,
+        zorder: bool = False,
+    ) -> Path:
+        """Write ``sdf`` as year dirs where no reader looks: a fresh
+        generation inside a manifest item (invisible until a manifest names
+        it), or a hidden ``.tmp-KEY-*`` sibling of a rename item."""
+        if item_format.is_manifest_item(path):
+            stage = item_format.generation_dir(path, uuid.uuid4().hex)
+        else:
+            stage = self._items_path / f".tmp-{path.name}-{uuid.uuid4().hex}"
+        self._write_parquet(sdf, stage, cluster_by=cluster_by, zorder=zorder)
+        return stage
+
+    def _write_generation(self, path: Path, sdf: DataFrame) -> dict[str, str]:
+        """Stage one generation of a manifest item; returns its year map."""
+        return self._manifest_years(path, {}, _Staged(self._stage(path, sdf)))
 
     @staticmethod
-    def _is_manifest_item(path: Path) -> bool:
-        return (path / _MANIFESTS_DIR).is_dir()
+    def _manifest_years(
+        path: Path, live: dict[str, str], staged: _Staged
+    ) -> dict[str, str]:
+        """The year mapping after ``staged`` is published over ``live``."""
+        years = {y: rel for y, rel in live.items() if y not in staged.touched}
+        for y, d in item_format.year_dirs(staged.dir).items():
+            years[y] = d.relative_to(path).as_posix()
+        return years
 
-    def _latest_manifest(self, path: Path) -> tuple[int, dict[str, str]]:
-        """(version, {year -> generation dir relpath}) of the last commit."""
-        versions = sorted(
-            int(p.stem[1:]) for p in (path / _MANIFESTS_DIR).glob("v*.json")
-        )
-        if not versions:
-            raise ValueError(f"no committed manifest under {path}")
-        v = versions[-1]
-        doc = json.loads((path / _MANIFESTS_DIR / f"v{v:08d}.json").read_text())
-        return v, doc["years"]
+    def _commit_manifest(
+        self,
+        path: Path,
+        version: int,
+        years: dict[str, str],
+        operation: str = "append",
+        txn: str | None = None,
+    ) -> None:
+        """Publish manifest ``version`` — the manifest protocol's commit
+        point, a put-if-absent (see :func:`item_format.put_if_absent`). If
+        another writer already published this version the loser gets
+        ConcurrentCommitError and must retry from the new latest version
+        (Delta's protocol: replacing the winner's manifest would lose its
+        data generation). On behalf of a multi-item ``txn`` the publish is
+        idempotent: an existing manifest that names the same txn is
+        success, because an earlier fan-out already published it."""
+        try:
+            item_format.write_manifest(path, version, years, operation, txn)
+        except FileExistsError:
+            if txn is None or item_format.read_manifest(path, version).get("txn") != txn:
+                raise ConcurrentCommitError(
+                    f"manifest v{version} under {path} was already committed "
+                    "by another writer; re-read latest and retry"
+                ) from None
+
+    def _publish(
+        self,
+        path: Path,
+        version: int,
+        live: dict[str, str],
+        staged: _Staged,
+        operation: str,
+    ) -> None:
+        """Make a staged mutation visible — the only step in which the two
+        protocols differ: one new manifest, or a journaled swap of the
+        touched year dirs."""
+        if item_format.is_manifest_item(path):
+            years = self._manifest_years(path, live, staged)
+            self._commit_manifest(path, version + 1, years, operation=operation)
+            return
+        touched = {*staged.touched, *item_format.year_dirs(staged.dir)}
+        item_format.swap_in(path, staged.dir, sorted(touched))
+
+    def _swap_stages(self, path: Path) -> list[Path]:
+        """The ``.tmp-KEY-*`` / ``.trash-KEY-*`` staging dirs of ``path``'s
+        key under the rename protocol (manifest items have none). The hex
+        suffix keeps key A off the staging of key A-B."""
+        own = re.compile(rf"\.(tmp|trash)-{re.escape(path.name)}-[0-9a-f]+")
+        return [s for s in self._items_path.glob(".*") if own.fullmatch(s.name)]
+
+    def _finish_swaps(self, path: Path, cutoff: float | None = None) -> int:
+        """Complete every journaled swap of ``path`` — a rename-protocol
+        publish cut short by a crash — so that no year stays moved out.
+        With a ``cutoff`` (vacuum), only stages last modified before it are
+        touched, and those without a journal (a writer that crashed before
+        publishing) are deleted. Returns the number of stages removed."""
+        removed = 0
+        for stage in self._swap_stages(path):
+            if cutoff is not None and stage.stat().st_mtime > cutoff:
+                continue
+            if (stage / item_format.SWAP_PLAN).exists():
+                item_format.finish_swap(path, stage)
+            elif cutoff is not None:
+                shutil.rmtree(stage, ignore_errors=True)
+            else:
+                continue
+            removed += 1
+        return removed
+
+    def _mutate(self, path: Path, operation: str, stage) -> int:
+        """resolve → stage → publish, the sequence of every mutation.
+        ``stage(live)`` builds the replacement against the live year dirs
+        and stages it, or returns None when nothing would change. A publish
+        that loses a manifest race re-resolves and re-stages against the
+        new latest version, because the winner may have changed the very
+        years this mutation read; the losing generation is debris that
+        vacuum() collects. Returns the staged count (rows deleted, years
+        compacted). A rename item admits one writer at a time, so a
+        journaled swap of its key found here was cut short by a crash, and
+        is completed before this mutation resolves the live years."""
+        self._finish_swaps(path)
+        err: ConcurrentCommitError | None = None
+        for _attempt in range(_COMMIT_ATTEMPTS):
+            version, live = item_format.live_year_dirs(path)
+            staged = stage(live)
+            if staged is None:
+                return 0
+            try:
+                self._publish(path, version, live, staged, operation)
+                return staged.n
+            except ConcurrentCommitError as e:
+                err = e
+        raise err
+
+    # -- time travel (manifest protocol, EXT) -------------------------------
 
     def versions(self, key: str) -> list[int]:
         """EXT (manifest protocol): committed manifest versions still
@@ -499,14 +677,22 @@ class Store:
         disappear once :meth:`vacuum` runs (same lifecycle as Delta's
         log retention). Rename-protocol items have no version history
         (every append rewrites in place) -> empty list."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        if not self._is_manifest_item(path):
-            return []
-        return sorted(
-            int(p.stem[1:]) for p in (path / _MANIFESTS_DIR).glob("v*.json")
-        )
+        return item_format.versions(self._existing(key))
+
+    def _manifest_at(self, key: str, version: int) -> tuple[Path, dict[str, str]]:
+        """(item path, year mapping) of a committed manifest version."""
+        path = self._existing(key)
+        if not item_format.is_manifest_item(path):
+            raise ValueError(
+                f"key={key.upper()} uses the rename protocol (no history)"
+            )
+        try:
+            return path, item_format.read_manifest(path, version)["years"]
+        except FileNotFoundError:
+            raise ValueError(
+                f"key={key.upper()} has no version {version} "
+                f"(committed: {item_format.versions(path)})"
+            ) from None
 
     def snapshot(self, key: str, version: int) -> DataFrame:
         """EXT: time travel — lazy DataFrame of the item AS OF a
@@ -514,28 +700,10 @@ class Store:
         files that manifest references; immutable generations make old
         snapshots exact, not approximations. Raises ValueError if the
         version was never committed or has been vacuumed away."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        if not self._is_manifest_item(path):
-            raise ValueError(
-                f"key={key.upper()} uses the rename protocol (no history)"
-            )
-        mpath = path / _MANIFESTS_DIR / f"v{version:08d}.json"
-        if not mpath.exists():
-            raise ValueError(
-                f"key={key.upper()} has no version {version} "
-                f"(committed: {self.versions(key)})"
-            )
-        mapping = json.loads(mpath.read_text())["years"]
-        idx = self._metadata.index_name
-        cols = [idx, *self._metadata.column_schema]
-        if not mapping:
-            return self._empty_item_df().orderBy(idx)
-        raw = self._spark.read.schema(self._declared_read_schema()).parquet(
-            *self._manifest_paths(path, mapping)
+        path, mapping = self._manifest_at(key, version)
+        return self._read(path, self._manifest_paths(path, mapping)).orderBy(
+            self._metadata.index_name
         )
-        return self._fill_defaults(raw).select(*cols).orderBy(idx)
 
     def diff(self, key: str, v_from: int, v_to: int) -> DataFrame:
         """EXT: CDC between two committed manifest versions — the rows
@@ -549,55 +717,33 @@ class Store:
         cost tracks the write volume between the versions, not the table
         size. The changed years' new generations are anti-joined on the
         index against the same years as of ``v_from``."""
-        path = self._item_path(key)
-        for v in (v_from, v_to):
-            if not (path / _MANIFESTS_DIR / f"v{v:08d}.json").exists():
-                raise ValueError(
-                    f"key={key.upper()} has no version {v} "
-                    f"(committed: {self.versions(key)})"
-                )
-        m_from = json.loads(
-            (path / _MANIFESTS_DIR / f"v{v_from:08d}.json").read_text()
-        )["years"]
-        m_to = json.loads(
-            (path / _MANIFESTS_DIR / f"v{v_to:08d}.json").read_text()
-        )["years"]
+        path, m_from = self._manifest_at(key, v_from)
+        _, m_to = self._manifest_at(key, v_to)
         changed = {y: rel for y, rel in m_to.items() if m_from.get(y) != rel}
         idx = self._metadata.index_name
-        cols = [idx, *self._metadata.column_schema]
-        if not changed:
-            return self._empty_item_df()
-        new_side = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema()).parquet(
-                *self._manifest_paths(path, changed)
-            )
-        ).select(*cols)
+        new_side = self._read(path, self._manifest_paths(path, changed))
         old_rels = {y: m_from[y] for y in changed if y in m_from}
         if not old_rels:
             return new_side.orderBy(idx)
-        old_side = self._spark.read.schema(self._declared_read_schema()).parquet(
-            *self._manifest_paths(path, old_rels)
-        ).select(idx)
+        old_side = self._read(path, self._manifest_paths(path, old_rels)).select(idx)
         return new_side.join(old_side, idx, "left_anti").orderBy(idx)
 
     def history(self, key: str) -> list[dict]:
         """EXT (manifest protocol): the commit log as data — one entry
         per surviving manifest version with its operation and commit
         time (DESCRIBE HISTORY parity). Rename items have no log."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        if not self._is_manifest_item(path):
-            return []
+        path = self._existing(key)
         out = []
-        for v in self.versions(key):
-            mpath = path / _MANIFESTS_DIR / f"v{v:08d}.json"
-            doc = json.loads(mpath.read_text())
+        for v in item_format.versions(path):
+            doc = item_format.read_manifest(path, v)
             out.append(
                 {
                     "version": v,
                     "operation": doc.get("operation", "unknown"),
-                    "committed_at": doc.get("committed_at", mpath.stat().st_mtime),
+                    "committed_at": doc.get(
+                        "committed_at",
+                        item_format.manifest_path(path, v).stat().st_mtime,
+                    ),
                     "n_years": len(doc["years"]),
                 }
             )
@@ -610,114 +756,26 @@ class Store:
         are immutable, so nothing is copied; the rolled-back state and
         the history both survive). Fails if the target version was
         vacuumed. Returns the new version number."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        if not self._is_manifest_item(path):
-            raise ValueError(
-                f"key={key.upper()} uses the rename protocol (no history)"
-            )
-        mpath = path / _MANIFESTS_DIR / f"v{version:08d}.json"
-        if not mpath.exists():
-            raise ValueError(
-                f"key={key.upper()} has no version {version} "
-                f"(committed: {self.versions(key)})"
-            )
-        mapping = json.loads(mpath.read_text())["years"]
-        latest, _cur = self._latest_manifest(path)
+        path, mapping = self._manifest_at(key, version)
+        latest = item_format.versions(path)[-1]
         # restored generations must survive the next vacuum: they are
         # referenced by the NEW latest manifest, so the live set is right
         self._commit_manifest(path, latest + 1, mapping, operation="restore")
         return latest + 1
 
-    def _commit_manifest(
-        self,
-        path: Path,
-        version: int,
-        years: dict[str, str],
-        operation: str = "append",
-    ) -> None:
-        """Publish one manifest object — THE commit point. The publish is
-        put-if-absent: ``os.link`` from a fully-written temp file to the
-        versioned target is atomic AND fails with EEXIST if another
-        writer already published this version, in which case the loser
-        gets ConcurrentCommitError and must retry from the new latest
-        version (Delta's protocol; a plain rename would silently replace
-        the winner's commit and lose its data generation). On object
-        storage this maps to a conditional PUT (If-None-Match: *) of the
-        versioned manifest key."""
-        doc = {
-            "protocol": "manifest-v1",
-            "version": version,
-            "years": years,
-            "operation": operation,
-            "committed_at": time.time(),
-        }
-        target = path / _MANIFESTS_DIR / f"v{version:08d}.json"
-        tmp = target.with_name(f".{target.name}.{uuid.uuid4().hex}.tmp")
-        tmp.write_text(json.dumps(doc, sort_keys=True))
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"manifest v{version} already committed by another writer "
-                f"under {path}; re-read latest and retry"
-            ) from None
-        finally:
-            tmp.unlink(missing_ok=True)
-
     def fsck(self, key: str) -> dict:
-        """EXT: integrity check of an item against its manifest — are
-        all referenced data files present, and does each live year dir
-        contain exactly the files the writer left? Returns
+        """EXT: integrity check of an item's live year dirs — does each
+        one exist and hold at least one Parquet file? Returns
         ``{"ok": bool, "missing": [...], "years_checked": N}``. Detects
         partial deletions (someone rm'd inside a live generation) and
-        interrupted restores before a query fails mid-scan. Rename
-        items (no manifest inventory) get a structural check only:
-        every year dir must hold at least one parquet file."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        missing: list[str] = []
-        if not self._is_manifest_item(path):
-            years = sorted(path.glob(f"{_PARTITION_COL}=*"))
-            for ydir in years:
-                if not any(ydir.glob("*.parquet")):
-                    missing.append(str(ydir))
-            return {
-                "ok": not missing,
-                "missing": missing,
-                "years_checked": len(years),
-            }
-        _, mapping = self._latest_manifest(path)
-        for year, rel in sorted(mapping.items()):
-            ydir = path / rel
-            if not ydir.is_dir() or not any(ydir.glob("*.parquet")):
-                missing.append(str(ydir))
-        return {
-            "ok": not missing,
-            "missing": missing,
-            "years_checked": len(mapping),
-        }
-
-    def _write_generation(
-        self,
-        path: Path,
-        sdf: DataFrame,
-        cluster_by: list[str] | None = None,
-        zorder: bool = False,
-    ) -> dict[str, str]:
-        """Write one immutable data generation; returns its year map."""
-        gen = uuid.uuid4().hex
-        gen_dir = path / _DATA_DIR / gen
-        self._write_parquet(sdf, gen_dir, cluster_by=cluster_by, zorder=zorder)
-        return {
-            d.name.split("=", 1)[1]: f"{_DATA_DIR}/{gen}/{d.name}"
-            for d in sorted(gen_dir.glob(f"{_PARTITION_COL}=*"))
-        }
-
-    def _manifest_paths(self, path: Path, mapping: dict[str, str]) -> list[str]:
-        return [str(path / rel) for _, rel in sorted(mapping.items())]
+        interrupted restores before a query fails mid-scan."""
+        path = self._existing(key)
+        _, live = item_format.live_year_dirs(path)
+        missing = [
+            d for d in self._manifest_paths(path, live)
+            if not any(Path(d).glob("*.parquet"))
+        ]
+        return {"ok": not missing, "missing": missing, "years_checked": len(live)}
 
     # -- write (parity: store.py:196-212) ----------------------------------
 
@@ -725,12 +783,27 @@ class Store:
         path = self._item_path(key)
         if path.exists():
             raise ValueError(f"key={key.upper()} already exists")
-        if self._commit_protocol == "manifest":
-            (path / _MANIFESTS_DIR).mkdir(parents=True)
-            years = self._write_generation(path, self._normalize(data))
-            self._commit_manifest(path, 1, years, operation="write")
+        if self._commit_protocol == "rename":
+            self._write_parquet(self._normalize(data), path)
             return
-        self._write_parquet(self._normalize(data), path)
+        spath, years = self._stage_create(key, data)
+        try:
+            self._commit_manifest(spath, 1, years, operation="write")
+            os.rename(spath, path)
+        finally:
+            shutil.rmtree(spath, ignore_errors=True)  # gone once renamed
+
+    def _stage_create(self, key: str, data) -> tuple[Path, dict[str, str]]:
+        """Stage a NEW manifest item under a hidden ``.stage-KEY-*`` dir:
+        no key listing, read or write sees it until it is renamed into
+        place, so a create that fails leaves no half-made key."""
+        spath = self._items_path / f".stage-{key.upper()}-{uuid.uuid4().hex}"
+        (spath / item_format.MANIFESTS_DIR).mkdir(parents=True)
+        try:
+            return spath, self._write_generation(spath, self._normalize(data))
+        except BaseException:
+            shutil.rmtree(spath, ignore_errors=True)
+            raise
 
     # -- append + dedup (parity: store.py:214-236) --------------------------
 
@@ -757,127 +830,57 @@ class Store:
         path = self._item_path(key)
         if not path.exists():
             raise ValueError(f"key={key.upper()} does not exist, (use write instead?)")
-
-        idx = self._metadata.index_name
-        # priority orders the dedup: old-wins (append, reference intent)
-        # gives old rows prio 0 < new 1; new-wins (upsert) inverts it
-        new_prio = 0 if new_wins else 1
-        new = self._normalize(data).withColumn("_oak_prio", F.lit(new_prio))
-        # metadata-scale action: the distinct years of the incoming batch
-        years = [r[0] for r in new.select(F.year(F.col(idx))).distinct().collect()]
-        manifest = self._is_manifest_item(path)
-
-        # Dedup on the index key, old-wins — the *intended* semantics
-        # (README.md:39-48; the reference's value-only drop_duplicates at
-        # store.py:229-230 is a flagged bug). row_number is deterministic:
-        # ties break by priority then full row value.
-        value_cols = list(self._metadata.column_schema)
-
-        def dedup(old: DataFrame) -> DataFrame:
-            w = Window.partitionBy(idx).orderBy("_oak_prio", *value_cols)
-            return (
-                old.unionByName(new)
-                .withColumn("_oak_rn", F.row_number().over(w))
-                .filter(F.col("_oak_rn") == 1)
-                .drop("_oak_prio", "_oak_rn")
-            )
-
-        if manifest:
-            # Optimistic concurrency: recompute against the LATEST
-            # manifest each attempt — a racing writer that won the
-            # version we targeted may have changed the very years we
-            # touch, so the losing append must re-read and re-dedup, not
-            # just re-publish (Delta's commit-retry semantics). The
-            # failed attempt's generation is unreferenced debris that
-            # vacuum() collects past its retention horizon.
-            last_err: Exception | None = None
-            for _attempt in range(5):
-                version, merged = self._stage_append(
-                    path, new, years, dedup, new_prio
-                )
-                try:
-                    self._commit_manifest(path, version, merged)
-                    return
-                except ConcurrentCommitError as e:
-                    last_err = e
-            raise last_err
-
-        old = (
-            self._fill_defaults(
-                self._spark.read.schema(self._declared_read_schema()).parquet(
-                    str(path)
-                )
-            )
-            .filter(F.col(_PARTITION_COL).isin(years))  # partition pruning
-            .select(idx, *self._metadata.column_schema)
-            .withColumn("_oak_prio", F.lit(1 - new_prio))
+        new = self._normalize(data)
+        self._mutate(
+            path, "append", lambda live: self._stage_append(path, live, new, new_wins)
         )
-        combined = dedup(old)
 
-        # Write the touched partitions to a temp sibling, then swap each
-        # year directory in. (Local-FS renames are atomic per-partition —
-        # the cross-partition window is narrower than the reference's
-        # full in-place rewrite, which has no safe point; for object
-        # storage use commit_protocol="manifest" above.)
-        tmp = self._items_path / f".tmp-{key.upper()}-{uuid.uuid4().hex}"
-        trash = self._items_path / f".trash-{key.upper()}-{uuid.uuid4().hex}"
-        self._write_parquet(combined, tmp)
-        trash.mkdir()
-        for part_dir in sorted(tmp.glob(f"{_PARTITION_COL}=*")):
-            dest = path / part_dir.name
-            if dest.exists():
-                os.rename(dest, trash / part_dir.name)
-            os.rename(part_dir, dest)
-        shutil.rmtree(tmp)
-        shutil.rmtree(trash)
+    def _stage_append(
+        self, path: Path, live: dict[str, str], new: DataFrame, new_wins: bool
+    ) -> _Staged:
+        """Stage an append: the live rows of the years ``new`` touches,
+        unioned with ``new`` and deduped on the index.
 
-    # -- query (parity: store.py:238-267) -----------------------------------
-
-    def _stage_append(self, path, new, years, dedup, new_prio):
-        """STAGE one append against the latest manifest: write the
-        merged data generation (invisible — no manifest published) and
-        return (target_version, merged_mapping). Shared by the
-        single-item append retry loop and :meth:`multi_commit`."""
+        Dedup is on the index key, old-wins — the *intended* semantics
+        (README.md:39-48; the reference's value-only drop_duplicates at
+        store.py:229-230 is a flagged bug); upsert's new-wins inverts the
+        priority. row_number is deterministic: ties break by priority
+        then full row value."""
         idx = self._metadata.index_name
-        version, mapping = self._latest_manifest(path)
-        touched = {
-            str(y): mapping[str(y)] for y in years if str(y) in mapping
-        }
-        if touched:
-            old = (
-                self._fill_defaults(
-                    self._spark.read.schema(
-                        self._declared_read_schema()
-                    ).parquet(*self._manifest_paths(path, touched))
-                )
-                .select(idx, *self._metadata.column_schema)
-                .withColumn("_oak_prio", F.lit(1 - new_prio))
-            )
-        else:
-            old = new.limit(0)
-        # immutable generation + one-object manifest publish: the
-        # commit is a single atomic write even on object storage;
-        # superseded year dirs stay readable until vacuum()
-        new_years = self._write_generation(path, dedup(old))
-        return version + 1, {**mapping, **new_years}
+        # metadata-scale action: the distinct years of the incoming batch
+        years = [str(r[0]) for r in new.select(F.year(idx)).distinct().collect()]
+        touched = {y: live[y] for y in years if y in live}
+        old_prio, new_prio = (1, 0) if new_wins else (0, 1)
+        w = Window.partitionBy(idx).orderBy("_oak_prio", *self._metadata.column_schema)
+        merged = (
+            self._read(path, self._manifest_paths(path, touched))
+            .withColumn("_oak_prio", F.lit(old_prio))
+            .unionByName(new.withColumn("_oak_prio", F.lit(new_prio)))
+            .withColumn("_oak_rn", F.row_number().over(w))
+            .filter(F.col("_oak_rn") == 1)
+            .drop("_oak_prio", "_oak_rn")
+        )
+        return _Staged(self._stage(path, merged))
 
     # -- EXT: multi-item atomic commit ---------------------------------------
 
     def multi_commit(self, datas: dict, operation: str = "multi") -> int:
         """EXT: publish N items' data in ONE transaction — corpus +
-        derived index + stats appear together or not at all (r13
-        verdict ask #8). Manifest protocol only.
+        derived index + stats appear together or not at all, so no
+        reader ever sees an index built from rows it cannot read.
+        Manifest protocol only.
 
         Protocol (the Delta-style commit rung, one level up):
 
-        1. STAGE — per item, write the merged data generation
-           (old-wins dedup against touched years for existing items;
-           new items are created) and compute its target manifest.
-           Nothing is visible: no per-item manifest is published.
+        1. STAGE — per item, run the same stager as the single-item
+           mutation (old-wins dedup against touched years for existing
+           items; new items are created) and compute its target
+           manifest. Nothing is visible: no per-item manifest is
+           published.
         2. COMMIT — publish ONE transaction object
            ``_txns/tNNNNNNNN.json`` naming every (item, version,
-           year-mapping) via the same ``os.link`` put-if-absent rung
-           as :meth:`_commit_manifest`. This single object write IS
+           year-mapping) via the same put-if-absent as
+           :meth:`_commit_manifest`. This single object write IS
            the commit point: before it, a crash leaves only
            unreferenced generation debris (invisible; vacuum
            collects); after it, the transaction is durable.
@@ -901,10 +904,9 @@ class Store:
         vacuum collects the staging debris past retention). A staging
         error on a later item removes every staged dir of this call.
 
-        Beyond appends (r14 verdict ask #5), a value may be a MOVE
-        descriptor so corpus + derived-artifact maintenance publishes
-        atomically — e.g. a GDPR delete plus the rewritten index it
-        invalidates:
+        Besides appends, a value may be a MOVE descriptor, so that
+        corpus and derived-artifact maintenance publish atomically —
+        e.g. a GDPR delete plus the rewritten index it invalidates:
 
             store.multi_commit({
                 "EVENTS":  {"op": "delete_where",
@@ -930,99 +932,59 @@ class Store:
         if not datas:
             raise ValueError("multi_commit needs at least one item")
         self._txns_path.mkdir(exist_ok=True)
-        idx = self._metadata.index_name
-        value_cols = list(self._metadata.column_schema)
         plans: dict[str, dict] = {}
         staged_dirs: list[Path] = []
         try:
             for key in sorted(datas):
                 data = datas[key]
                 path = self._item_path(key)
-                if path.exists() and not self._is_manifest_item(path):
-                    raise ValueError(
-                        f"key={key.upper()} uses the rename protocol; "
-                        "multi_commit items must be manifest items"
-                    )
-                if isinstance(data, dict) and "op" in data:
-                    if not path.exists():
+                if not path.exists():
+                    if isinstance(data, dict) and "op" in data:
                         raise ValueError(
                             f"key={key.upper()} does not exist "
                             f"(move op {data['op']!r} needs an item)"
                         )
-                    version, mapping = self._latest_manifest(path)
-                    if data["op"] == "delete_where":
-                        pred = data["predicate"]
-                        pred = (
-                            F.expr(pred)
-                            if isinstance(pred, str) else pred
-                        )
-                        merged, _n = self._stage_delete_where(
-                            path, mapping, pred
-                        )
-                        op = "delete"
-                    elif data["op"] == "compact":
-                        merged, _n = self._stage_compact(
-                            path,
-                            mapping,
-                            data.get("min_files_per_partition", 2),
-                            cluster_by=data.get("cluster_by"),
-                            zorder=data.get("zorder", False),
-                        )
-                        op = "compact"
-                    else:
-                        raise ValueError(
-                            f"unknown multi_commit op {data['op']!r} "
-                            "(expected 'delete_where' or 'compact')"
-                        )
-                    plans[key.upper()] = {
-                        "version": version + 1, "years": merged,
-                        "operation": op,
-                    }
-                elif path.exists():
-                    new = self._normalize(data).withColumn(
-                        "_oak_prio", F.lit(1)
-                    )
-                    years = [
-                        r[0]
-                        for r in new.select(
-                            F.year(F.col(idx))
-                        ).distinct().collect()
-                    ]
-
-                    def dedup(old, new=new):
-                        w = Window.partitionBy(idx).orderBy(
-                            "_oak_prio", *value_cols
-                        )
-                        return (
-                            old.unionByName(new)
-                            .withColumn(
-                                "_oak_rn", F.row_number().over(w)
-                            )
-                            .filter(F.col("_oak_rn") == 1)
-                            .drop("_oak_prio", "_oak_rn")
-                        )
-
-                    version, merged = self._stage_append(
-                        path, new, years, dedup, 1
-                    )
-                    plans[key.upper()] = {
-                        "version": version, "years": merged,
-                    }
-                else:
-                    staged_name = (
-                        f".stage-{key.upper()}-{uuid.uuid4().hex}"
-                    )
-                    spath = self._items_path / staged_name
-                    spath.mkdir(parents=True)
+                    spath, years = self._stage_create(key, data)
                     staged_dirs.append(spath)
-                    (spath / _MANIFESTS_DIR).mkdir()
-                    merged = self._write_generation(
-                        spath, self._normalize(data)
-                    )
                     plans[key.upper()] = {
-                        "version": 1, "years": merged,
-                        "staged": staged_name,
+                        "version": 1, "years": years, "staged": spath.name,
                     }
+                    continue
+                if not item_format.is_manifest_item(path):
+                    raise ValueError(
+                        f"key={key.upper()} uses the rename protocol; "
+                        "multi_commit items must be manifest items"
+                    )
+                version, live = item_format.live_year_dirs(path)
+                plan: dict = {"version": version + 1}
+                if not (isinstance(data, dict) and "op" in data):
+                    staged = self._stage_append(
+                        path, live, self._normalize(data), new_wins=False
+                    )
+                elif data["op"] == "delete_where":
+                    pred = data["predicate"]
+                    pred = F.expr(pred) if isinstance(pred, str) else pred
+                    staged = self._stage_delete_where(path, live, pred)
+                    plan["operation"] = "delete"
+                elif data["op"] == "compact":
+                    staged = self._stage_compact(
+                        path,
+                        live,
+                        data.get("min_files_per_partition", 2),
+                        cluster_by=data.get("cluster_by"),
+                        zorder=data.get("zorder", False),
+                    )
+                    plan["operation"] = "compact"
+                else:
+                    raise ValueError(
+                        f"unknown multi_commit op {data['op']!r} "
+                        "(expected 'delete_where' or 'compact')"
+                    )
+                plan["years"] = (
+                    dict(live) if staged is None
+                    else self._manifest_years(path, live, staged)
+                )
+                plans[key.upper()] = plan
         except BaseException:
             for spath in staged_dirs:
                 shutil.rmtree(spath, ignore_errors=True)
@@ -1042,17 +1004,13 @@ class Store:
             "committed_at": time.time(),
         }
         target = self._txns_path / f"{txn_id}.json"
-        tmp = target.with_name(f".{target.name}.{uuid.uuid4().hex}.tmp")
-        tmp.write_text(json.dumps(doc, sort_keys=True))
         try:
-            os.link(tmp, target)  # THE commit point (put-if-absent)
+            item_format.put_if_absent(target, doc)  # THE commit point
         except FileExistsError:
             raise ConcurrentCommitError(
                 f"txn {txn_id} already committed by another writer; "
                 "re-stage and retry"
             ) from None
-        finally:
-            tmp.unlink(missing_ok=True)
         try:
             self._apply_txn(doc)
         except ConcurrentCommitError:
@@ -1061,39 +1019,6 @@ class Store:
             self._abort_txn(target, doc, self._txn_item_states(doc))
             raise
         return txn_v
-
-    def _publish_manifest_for_txn(
-        self, path, version: int, years: dict, operation: str,
-        txn: str,
-    ) -> None:
-        """Idempotent per-item manifest publish on behalf of a
-        committed transaction: EEXIST whose existing doc names the
-        SAME txn is success (a previous fan-out already published);
-        any other existing doc means an independent writer took the
-        version — surfaced, never silently overwritten."""
-        doc = {
-            "protocol": "manifest-v1",
-            "version": version,
-            "years": years,
-            "operation": operation,
-            "txn": txn,
-            "committed_at": time.time(),
-        }
-        target = path / _MANIFESTS_DIR / f"v{version:08d}.json"
-        tmp = target.with_name(f".{target.name}.{uuid.uuid4().hex}.tmp")
-        tmp.write_text(json.dumps(doc, sort_keys=True))
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            cur = json.loads(target.read_text())
-            if cur.get("txn") != txn:
-                raise ConcurrentCommitError(
-                    f"manifest v{version} under {path} was taken by "
-                    "an independent writer while txn "
-                    f"{txn} was in flight"
-                ) from None
-        finally:
-            tmp.unlink(missing_ok=True)
 
     def _apply_txn(self, doc: dict) -> None:
         for key in sorted(doc["items"]):
@@ -1110,7 +1035,7 @@ class Store:
                         f"item {key} is gone and the item was never "
                         "published — staged data lost"
                     )
-            self._publish_manifest_for_txn(
+            self._commit_manifest(
                 path,
                 int(plan["version"]),
                 plan["years"],
@@ -1146,12 +1071,11 @@ class Store:
         states: dict[str, str] = {}
         for key, plan in doc["items"].items():
             path = self._items_path / key
-            mpath = (
-                path / _MANIFESTS_DIR
-                / f"v{int(plan['version']):08d}.json"
-            )
-            if mpath.exists():
-                cur = json.loads(mpath.read_text())
+            try:
+                cur = item_format.read_manifest(path, int(plan["version"]))
+            except FileNotFoundError:
+                cur = None
+            if cur is not None:
                 states[key] = (
                     "published" if cur.get("txn") == doc["txn"]
                     else "conflict"
@@ -1183,20 +1107,9 @@ class Store:
             path = self._items_path / key
             if state == "published":
                 version = int(plan["version"])
-                latest = max(
-                    (
-                        int(p.stem[1:])
-                        for p in (path / _MANIFESTS_DIR).glob("v*.json")
-                    ),
-                    default=0,
-                )
-                if latest == version:
-                    (
-                        path / _MANIFESTS_DIR / f"v{version:08d}.json"
-                    ).unlink(missing_ok=True)
-                    if plan.get("staged") and not any(
-                        (path / _MANIFESTS_DIR).glob("v*.json")
-                    ):
+                if max(item_format.versions(path), default=0) == version:
+                    item_format.manifest_path(path, version).unlink(missing_ok=True)
+                    if plan.get("staged") and not item_format.versions(path):
                         shutil.rmtree(path)  # txn-created item: remove whole key
                     rolled_back.append(key)
                 else:
@@ -1281,8 +1194,8 @@ class Store:
         self._swap_metadata(self._metadata.with_column(name, tp, default))
 
     def rename_column(self, old: str, new: str) -> None:
-        """EXT schema evolution: METADATA-ONLY column rename (r14
-        verdict ask #6) — no file is rewritten. The logical surface
+        """EXT schema evolution: METADATA-ONLY column rename — no file
+        is rewritten. The logical surface
         (reads, writes, predicates, SQL) speaks the new name
         immediately; on disk the column keeps its original (physical)
         name forever: old files stay valid byte-for-byte, new files
@@ -1344,21 +1257,6 @@ class Store:
             )
         return sdf
 
-    def _read_raw(self, path: Path) -> DataFrame:
-        idx = self._metadata.index_name
-        cols = [idx, *self._metadata.column_schema]
-        sch = self._declared_read_schema()
-        if self._is_manifest_item(path):
-            _, mapping = self._latest_manifest(path)
-            if not mapping:
-                return self._empty_item_df()
-            raw = self._spark.read.schema(sch).parquet(
-                *self._manifest_paths(path, mapping)
-            )
-        else:
-            raw = self._spark.read.schema(sch).parquet(str(path))
-        return self._fill_defaults(raw).select(*cols)
-
     def _empty_item_df(self) -> DataFrame:
         import pyspark.sql.types as T
 
@@ -1371,47 +1269,20 @@ class Store:
         return self._spark.createDataFrame([], T.StructType(fields))
 
     def _scan(self, *, key: str, start: datetime | None, end: datetime | None) -> DataFrame:
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-
+        path = self._existing(key)
         idx = self._metadata.index_name
-        if self._is_manifest_item(path):
-            # manifest-side pruning: only year dirs intersecting the range
-            # even reach the scan's file listing (the manifest is the file
-            # index, like Delta's log-driven file skipping)
-            _, mapping = self._latest_manifest(path)
-            keep = {
-                y: rel
-                for y, rel in mapping.items()
-                if (start is None or int(y) >= start.year)
-                and (end is None or int(y) <= end.year)
-            }
-            if not keep:
-                return self._empty_item_df().orderBy(idx)
-            sdf = self._fill_defaults(
-                self._spark.read.schema(self._declared_read_schema()).parquet(
-                    *self._manifest_paths(path, keep)
-                )
-            )
-            if start is not None:
-                sdf = sdf.filter(F.col(idx) >= F.lit(start))
-            if end is not None:
-                sdf = sdf.filter(F.col(idx) <= F.lit(end))
-            return sdf.select(idx, *self._metadata.column_schema).orderBy(idx)
-
-        sdf = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema()).parquet(str(path))
-        )
-        # Explicit partition-pruning predicate on the year dir plus the
-        # exact inclusive range on the index (store.py:255-266 pushes
-        # row-group filters then re-filters exactly; Spark's parquet
-        # source gives us both, the year bound adds directory pruning).
-        if start is not None:
-            sdf = sdf.filter((F.col(_PARTITION_COL) >= start.year) & (F.col(idx) >= F.lit(start)))
-        if end is not None:
-            sdf = sdf.filter((F.col(_PARTITION_COL) <= end.year) & (F.col(idx) <= F.lit(end)))
-        return sdf.select(idx, *self._metadata.column_schema).orderBy(idx)
+        _, live = item_format.live_year_dirs(path)
+        # only year dirs intersecting the range reach the scan's file
+        # listing; the exact inclusive range on the index then prunes
+        # Parquet row groups and re-filters (the reference pushes pyarrow
+        # row-group filters, then re-filters exactly, store.py:255-266)
+        keep = {
+            y: rel
+            for y, rel in live.items()
+            if (start is None or int(y) >= start.year)
+            and (end is None or int(y) <= end.year)
+        }
+        return self._read(path, self._manifest_paths(path, keep), start, end).orderBy(idx)
 
     def _query(self, *, key: str, start: datetime | None, end: datetime | None) -> pd.DataFrame:
         pdf = self._scan(key=key, start=start, end=end).toPandas()
@@ -1431,10 +1302,10 @@ class Store:
         Repeated appends leave one file-set per append in each touched
         partition; small files tax scan planning and parquet footer
         reads. Partitions with more than ``min_files_per_partition``
-        parquet files are re-sorted and rewritten (same temp-and-swap as
-        append); others are untouched. Returns the number of partitions
-        compacted. The 100 TB operational pattern: run periodically,
-        per-partition, off the write path.
+        parquet files are re-sorted and rewritten (staged and published
+        like an append); others are untouched. Returns the number of
+        partitions compacted. The 100 TB operational pattern: run
+        periodically, per-partition, off the write path.
 
         ``cluster_by=[col, ...]`` additionally re-CLUSTERS the data:
         every partition is rewritten (the fragmentation gate is
@@ -1450,59 +1321,41 @@ class Store:
         """
         if zorder and not cluster_by:
             raise ValueError("zorder=True requires cluster_by columns")
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        idx = self._metadata.index_name
+        path = self._existing(key)
         if cluster_by is not None:
             cluster_by = [c.upper() for c in cluster_by]
             unknown = [c for c in cluster_by if c not in self._metadata.column_schema]
             if unknown:
                 raise SchemaError(f"unknown cluster_by columns {unknown}")
             min_files_per_partition = 0
-
-        if self._is_manifest_item(path):
-            version, mapping = self._latest_manifest(path)
-            merged, n_frag = self._stage_compact(
-                path, mapping, min_files_per_partition,
-                cluster_by=cluster_by, zorder=zorder,
-            )
-            if not n_frag:
-                return 0
-            self._commit_manifest(
-                path, version + 1, merged, operation="compact"
-            )
-            return n_frag
-
-        fragmented = [
-            d for d in sorted(path.glob(f"{_PARTITION_COL}=*"))
-            if len(list(d.glob("*.parquet"))) > min_files_per_partition
-        ]
-        if not fragmented:
-            return 0
-        years = [int(d.name.split("=", 1)[1]) for d in fragmented]
-
-        combined = (
-            self._fill_defaults(
-                self._spark.read.schema(self._declared_read_schema()).parquet(
-                    str(path)
-                )
-            )
-            .filter(F.col(_PARTITION_COL).isin(years))
-            .select(idx, *self._metadata.column_schema)
+        return self._mutate(
+            path,
+            "compact",
+            lambda live: self._stage_compact(
+                path, live, min_files_per_partition, cluster_by, zorder
+            ),
         )
-        tmp = self._items_path / f".tmp-{key.upper()}-{uuid.uuid4().hex}"
-        trash = self._items_path / f".trash-{key.upper()}-{uuid.uuid4().hex}"
-        self._write_parquet(combined, tmp, cluster_by=cluster_by, zorder=zorder)
-        trash.mkdir()
-        for part_dir in sorted(tmp.glob(f"{_PARTITION_COL}=*")):
-            dest = path / part_dir.name
-            if dest.exists():
-                os.rename(dest, trash / part_dir.name)
-            os.rename(part_dir, dest)
-        shutil.rmtree(tmp)
-        shutil.rmtree(trash)
-        return len(fragmented)
+
+    def _stage_compact(
+        self,
+        path: Path,
+        live: dict[str, str],
+        min_files_per_partition: int = 2,
+        cluster_by: list[str] | None = None,
+        zorder: bool = False,
+    ) -> _Staged | None:
+        """Stage a compaction: the live years holding more than
+        ``min_files_per_partition`` files, rewritten."""
+        frag = {
+            y: rel
+            for y, rel in live.items()
+            if len(list((path / rel).glob("*.parquet"))) > min_files_per_partition
+        }
+        if not frag:
+            return None
+        combined = self._read(path, self._manifest_paths(path, frag))
+        stage = self._stage(path, combined, cluster_by=cluster_by, zorder=zorder)
+        return _Staged(stage, n=len(frag))
 
     @staticmethod
     def _is_marker(p: Path) -> bool:
@@ -1518,33 +1371,24 @@ class Store:
         """Delete storage no reader can reach. Manifest items: year
         directories no manifest version newer than the latest
         references, superseded manifest files, stale commit debris.
-        Rename items: orphaned ``.tmp-KEY-*`` / ``.trash-KEY-*``
-        staging directories left by a writer that crashed mid-append or
-        mid-compact. Returns the number of directories removed.
+        Rename items: ``.tmp-KEY-*`` staging directories of a writer
+        that crashed mid-mutation — a stage whose swap had begun (it
+        holds a swap plan) is completed instead of deleted, so the year
+        it moved out is not lost — plus ``.trash-KEY-*`` dirs. Returns
+        the number of directories removed.
 
-        Writer safety: an in-flight append/compact stages data FIRST
-        and publishes after, so staging/generation paths younger than
+        Writer safety: an in-flight mutation stages data FIRST and
+        publishes after, so staging/generation paths younger than
         ``retention_sec`` may belong to a commit in flight — they are
         kept (Delta's retention check; pass ``retention_sec=0`` only
         when no writer can be in flight). Safe concurrently with
         readers of the LATEST version (their files are never touched);
         readers pinned to older versions must finish within the
         retention horizon."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
+        path = self._existing(key)
         cutoff = time.time() - retention_sec
-        if not self._is_manifest_item(path):
-            removed = 0
-            for stage in self._items_path.glob(f".tmp-{key.upper()}-*"):
-                if stage.stat().st_mtime <= cutoff:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    removed += 1
-            for stage in self._items_path.glob(f".trash-{key.upper()}-*"):
-                if stage.stat().st_mtime <= cutoff:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    removed += 1
-            return removed
+        if not item_format.is_manifest_item(path):
+            return self._finish_swaps(path, cutoff)
         # live-txn awareness: manifests / staged dirs named by a txn
         # NEWER than the checkpoint may still be re-published by
         # recover_multi_commits — never GC those; txn objects AT or
@@ -1563,7 +1407,7 @@ class Store:
                 for ikey, plan in json.loads(t.read_text())["items"].items():
                     if plan.get("staged"):
                         live_staged.add(plan["staged"])
-                    elif ikey == key.upper():
+                    elif ikey == path.name:
                         # a live txn staged this generation for THIS
                         # item; recovery will still publish it
                         live_staged.update(
@@ -1574,14 +1418,14 @@ class Store:
         for stage in self._items_path.glob(".stage-*"):
             if stage.name not in live_staged and stage.stat().st_mtime <= cutoff:
                 shutil.rmtree(stage, ignore_errors=True)
-        version, mapping = self._latest_manifest(path)
+        version, mapping = item_format.live_year_dirs(path)
         live = {str(path / rel) for rel in mapping.values()} | live_staged
         removed = 0
-        data_root = path / _DATA_DIR
+        data_root = path / item_format.DATA_DIR
         for gen_dir in sorted(data_root.iterdir()):
             if not gen_dir.is_dir():
                 continue
-            for ydir in sorted(gen_dir.glob(f"{_PARTITION_COL}=*")):
+            for ydir in item_format.year_dirs(gen_dir).values():
                 if str(ydir) not in live and ydir.stat().st_mtime <= cutoff:
                     shutil.rmtree(ydir)
                     removed += 1
@@ -1590,14 +1434,14 @@ class Store:
                 for p in rest:
                     p.unlink()
                 gen_dir.rmdir()
-        for m in (path / _MANIFESTS_DIR).glob("v*.json"):
-            if int(m.stem[1:]) >= version:
+        for v in item_format.versions(path):
+            if v >= version:
                 continue
-            txn = json.loads(m.read_text()).get("txn")
+            txn = item_format.read_manifest(path, v).get("txn")
             if txn and int(txn[1:]) > hwm:
                 continue  # a live txn's recovery would re-publish it
-            m.unlink()
-        for tmp in (path / _MANIFESTS_DIR).glob(".*.tmp"):
+            item_format.manifest_path(path, v).unlink()
+        for tmp in (path / item_format.MANIFESTS_DIR).glob(".*.tmp"):
             if tmp.stat().st_mtime <= cutoff:
                 tmp.unlink()
         return removed
@@ -1607,18 +1451,13 @@ class Store:
         partition/file counts. One aggregate scan (parquet footers serve
         the count; min/max read only the index column) plus a directory
         listing. The table an operator checks before/after compact()."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
+        path = self._existing(key)
         idx = self._metadata.index_name
-        if self._is_manifest_item(path):
-            _, mapping = self._latest_manifest(path)
-            part_dirs = [path / rel for rel in mapping.values()]
-        else:
-            part_dirs = sorted(path.glob(f"{_PARTITION_COL}=*"))
-        n_files = sum(len(list(d.glob("*.parquet"))) for d in part_dirs)
+        _, live = item_format.live_year_dirs(path)
+        dirs = self._manifest_paths(path, live)
+        n_files = sum(len(list(Path(d).glob("*.parquet"))) for d in dirs)
         row = (
-            self._read_raw(path)
+            self._read(path, dirs)
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min(idx).alias("lo"),
@@ -1631,203 +1470,56 @@ class Store:
             "rows": row["n"],
             "min_ts": row["lo"],
             "max_ts": row["hi"],
-            "partitions": len(part_dirs),
+            "partitions": len(live),
             "files": n_files,
         }
 
     def delete(self, key: str) -> None:
         """EXT: drop an item entirely (missing key -> ValueError, matching
-        the reference's exists/not-exists error convention)."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
+        the reference's exists/not-exists error convention). Its staging
+        dirs go too: a journaled swap left by a crash must not be replayed
+        onto a new item under the same key."""
+        path = self._existing(key)
+        for stage in self._swap_stages(path):
+            shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(path)
 
     def delete_range(self, key: str, start: datetime, end: datetime) -> int:
         """EXT: delete rows with ``start <= index <= end`` (inclusive,
-        matching the query bounds). Partition-pruned like append: only
-        year partitions intersecting the range are rewritten (filtered
-        to the surviving rows); everything else is untouched. Manifest
-        items commit a new version ("delete" in the history — and since
-        generations are immutable, the deleted rows remain reachable
-        through snapshot()/restore() until vacuum). Returns the number
-        of rows deleted."""
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        idx = self._metadata.index_name
-        years = list(range(start.year, end.year + 1))
-        in_range = (F.col(idx) >= F.lit(start)) & (F.col(idx) <= F.lit(end))
+        matching the query bounds) — :meth:`delete_where` with the
+        index-range predicate, so only files holding rows in the range
+        are rewritten and everything else is untouched. Only the range's
+        years are scanned. Returns the number of rows deleted."""
+        path = self._existing(key)
+        idx = F.col(self._metadata.index_name)
+        pred = (idx >= F.lit(start)) & (idx <= F.lit(end))
 
-        if self._is_manifest_item(path):
-            version, mapping = self._latest_manifest(path)
-            touched = {str(y): mapping[str(y)] for y in years if str(y) in mapping}
-            if not touched:
-                return 0
-            scan = self._fill_defaults(
-                self._spark.read.schema(self._declared_read_schema()).parquet(
-                    *self._manifest_paths(path, touched)
-                )
-            ).select(idx, *self._metadata.column_schema)
-            n_del = scan.filter(in_range).count()
-            if n_del == 0:
-                return 0
-            survivors = scan.filter(~in_range)
-            new_years = self._write_generation(path, survivors)
-            # a touched year whose rows ALL died has no new dir: remove
-            # it from the mapping instead of carrying the old data
-            merged = {
-                y: rel for y, rel in {**mapping, **new_years}.items()
-                if y not in touched or y in new_years
-            }
-            self._commit_manifest(path, version + 1, merged, operation="delete")
-            return n_del
+        def stage(live: dict[str, str]) -> _Staged | None:
+            # only the range's years can hold a match: scan no others
+            years = {y: d for y, d in live.items() if start.year <= int(y) <= end.year}
+            return self._stage_delete_where(path, years, pred)
 
-        scan = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema()).parquet(str(path))
-        ).filter(F.col(_PARTITION_COL).isin(years))
-        n_del = scan.filter(in_range).count()
-        if n_del == 0:
-            return 0
-        survivors = scan.filter(~in_range).select(idx, *self._metadata.column_schema)
-        tmp = self._items_path / f".tmp-{key.upper()}-{uuid.uuid4().hex}"
-        trash = self._items_path / f".trash-{key.upper()}-{uuid.uuid4().hex}"
-        self._write_parquet(survivors, tmp)
-        trash.mkdir()
-        for y in years:
-            dest = path / f"{_PARTITION_COL}={y}"
-            if dest.exists():
-                os.rename(dest, trash / dest.name)
-            src = tmp / f"{_PARTITION_COL}={y}"
-            if src.exists():
-                os.rename(src, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash)
-        return n_del
-
-    def _stage_delete_where(
-        self, path: Path, mapping: dict[str, str], pred: Column
-    ) -> tuple[dict[str, str], int]:
-        """Stage a predicate delete against the given year mapping:
-        write the survivors generation (affected files only; untouched
-        files of affected years copied byte-identically) and return
-        (new mapping, rows deleted) WITHOUT publishing a manifest —
-        shared by :meth:`delete_where` (publishes immediately) and
-        :meth:`multi_commit` delete moves (publishes at the txn commit
-        point)."""
-        from urllib.parse import unquote, urlparse
-
-        idx = self._metadata.index_name
-        cols = [idx, *self._metadata.column_schema]
-
-        def _local(uri: str) -> str:
-            return unquote(urlparse(uri).path)
-
-        def _year_of(fpath: str) -> str:
-            for seg in fpath.split("/"):
-                if seg.startswith(f"{_PARTITION_COL}="):
-                    return seg.split("=", 1)[1]
-            raise ValueError(f"no {_PARTITION_COL} segment in {fpath}")
-
-        scan = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema())
-            .parquet(*self._manifest_paths(path, mapping))
-            .withColumn("_file", F.input_file_name())
-        )
-        per_file = (
-            scan.where(pred)
-            .groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        if not per_file:
-            return dict(mapping), 0
-        n_del = sum(int(r["_n"]) for r in per_file)
-        affected = sorted(_local(r["_file"]) for r in per_file)
-        aff_by_year: dict[str, list[str]] = {}
-        for f in affected:
-            aff_by_year.setdefault(_year_of(f), []).append(f)
-        survivors = self._fill_defaults(
-            self._spark.read.schema(
-                self._declared_read_schema()
-            ).parquet(*affected)
-        ).where(~F.coalesce(pred, F.lit(False))).select(*cols)
-        gen = uuid.uuid4().hex
-        gen_dir = path / _DATA_DIR / gen
-        self._write_parquet(survivors, gen_dir)
-        merged = dict(mapping)
-        for y, files in aff_by_year.items():
-            ydir_new = gen_dir / f"{_PARTITION_COL}={y}"
-            old_dir = path / mapping[y]
-            touched_names = {Path(f).name for f in files}
-            untouched = [
-                f for f in sorted(old_dir.glob("*.parquet"))
-                if f.name not in touched_names
-            ]
-            if untouched:
-                ydir_new.mkdir(parents=True, exist_ok=True)
-                for f in untouched:
-                    shutil.copy2(f, ydir_new / f.name)
-            if ydir_new.is_dir() and any(ydir_new.iterdir()):
-                merged[y] = f"{_DATA_DIR}/{gen}/{ydir_new.name}"
-            else:
-                merged.pop(y, None)
-        return merged, n_del
-
-    def _stage_compact(
-        self,
-        path: Path,
-        mapping: dict[str, str],
-        min_files_per_partition: int = 2,
-        cluster_by: list[str] | None = None,
-        zorder: bool = False,
-    ) -> tuple[dict[str, str], int]:
-        """Stage a compaction against the given year mapping: rewrite
-        fragmented years into a fresh generation and return (new
-        mapping, partitions compacted) WITHOUT publishing — shared by
-        :meth:`compact` and :meth:`multi_commit` compact moves."""
-        idx = self._metadata.index_name
-        frag = {
-            y: rel
-            for y, rel in mapping.items()
-            if len(list((path / rel).glob("*.parquet")))
-            > min_files_per_partition
-        }
-        if not frag:
-            return dict(mapping), 0
-        combined = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema()).parquet(
-                *self._manifest_paths(path, frag)
-            )
-        ).select(idx, *self._metadata.column_schema)
-        new_years = self._write_generation(
-            path, combined, cluster_by=cluster_by, zorder=zorder
-        )
-        return {**mapping, **new_years}, len(frag)
+        return self._mutate(path, "delete", stage)
 
     def delete_where(self, key: str, predicate) -> int:
         """EXT: delete rows matching a VALUE predicate — the
         GDPR-style operational delete (``delete_where("EVENTS",
-        "USER_ID = 42")``) :meth:`delete_range` (time-window only)
-        could not express (r13 verdict ask #6). ``predicate`` is a SQL
-        string or Column over the item's columns (uppercase names +
-        the index column).
+        "USER_ID = 42")``) that a time-window delete cannot express.
+        ``predicate`` is a SQL string or Column over the item's columns
+        (uppercase names + the index column).
 
         File-level pruning: ONE predicate-pushed scan tags each
         matching row with its source file (``input_file_name`` — the
         same skip decision the z-order/bloom file-stats relations in
         ``operators/layout.py`` make from persisted stats), and only
         files that actually CONTAIN matching rows are rewritten to
-        their surviving rows. Every other file is untouched: in the
-        rename protocol unaffected years keep their very inodes and
-        unaffected files inside an affected year are re-linked
-        byte-identically; in the manifest protocol unaffected years
-        keep their old generation paths and unaffected files inside an
-        affected year are copied byte-for-byte into the new
-        generation. Manifest items commit a new version ("delete" in
-        the history); immutable generations keep the deleted rows
-        reachable through snapshot()/restore() until vacuum — the
-        delete_range contract, predicate-shaped. Returns rows deleted.
+        their surviving rows. Every other file is untouched: unaffected
+        years keep their live dirs, and unaffected files inside an
+        affected year are hard-linked into its replacement (same inode,
+        same bytes) under both protocols. Manifest items commit a new
+        version ("delete" in the history); immutable generations keep
+        the deleted rows reachable through snapshot()/restore() until
+        vacuum. Returns rows deleted.
 
         NULL semantics (SQL three-valued logic): only rows where the
         predicate is TRUE are deleted. Rows where it evaluates NULL
@@ -1842,85 +1534,43 @@ class Store:
         ``input_file_name()`` URIs and a relative or symlinked
         ``base_path``.
         """
+        path = self._existing(key)
+        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        return self._mutate(
+            path, "delete", lambda live: self._stage_delete_where(path, live, pred)
+        )
+
+    def _stage_delete_where(
+        self, path: Path, live: dict[str, str], pred: Column
+    ) -> _Staged | None:
+        """Stage a predicate delete: the surviving rows of every file
+        holding a match, plus hard links to the other files of those
+        files' years. A year left with no rows is dropped on publish."""
         from urllib.parse import unquote, urlparse
 
-        path = self._item_path(key)
-        if not path.exists():
-            raise ValueError(f"key={key.upper()} does not exist")
-        pred = (
-            F.expr(predicate) if isinstance(predicate, str) else predicate
-        )
-        idx = self._metadata.index_name
-        cols = [idx, *self._metadata.column_schema]
-
-        def _local(uri: str) -> str:
-            return unquote(urlparse(uri).path)
-
-        def _year_of(fpath: str) -> str:
-            for seg in fpath.split("/"):
-                if seg.startswith(f"{_PARTITION_COL}="):
-                    return seg.split("=", 1)[1]
-            raise ValueError(f"no {_PARTITION_COL} segment in {fpath}")
-
-        if self._is_manifest_item(path):
-            version, mapping = self._latest_manifest(path)
-            if not mapping:
-                return 0
-            merged, n_del = self._stage_delete_where(path, mapping, pred)
-            if n_del == 0:
-                return 0
-            self._commit_manifest(
-                path, version + 1, merged, operation="delete"
-            )
-            return n_del
-
-        scan = self._fill_defaults(
-            self._spark.read.schema(self._declared_read_schema())
-            .parquet(str(path))
-            .withColumn("_file", F.input_file_name())
-        )
         per_file = (
-            scan.where(pred)
+            self._read(path, self._manifest_paths(path, live))
+            .where(pred)
+            .withColumn("_file", F.input_file_name())
             .groupBy("_file")
             .agg(F.count(F.lit(1)).alias("_n"))
             .collect()
         )
         if not per_file:
-            return 0
-        n_del = sum(int(r["_n"]) for r in per_file)
-        affected = sorted(_local(r["_file"]) for r in per_file)
-        aff_by_year: dict[str, list[str]] = {}
-        for f in affected:
-            aff_by_year.setdefault(_year_of(f), []).append(f)
-        survivors = self._fill_defaults(
-            self._spark.read.schema(
-                self._declared_read_schema()
-            ).parquet(*affected)
-        ).where(~F.coalesce(pred, F.lit(False))).select(*cols)
-        tmp = self._items_path / f".tmp-{key.upper()}-{uuid.uuid4().hex}"
-        trash = (
-            self._items_path / f".trash-{key.upper()}-{uuid.uuid4().hex}"
-        )
-        self._write_parquet(survivors, tmp)
-        trash.mkdir()
-        for y, files in aff_by_year.items():
-            dest = path / f"{_PARTITION_COL}={y}"
-            os.rename(dest, trash / dest.name)
-            src = tmp / f"{_PARTITION_COL}={y}"
-            if src.exists():
-                os.rename(src, dest)
-            else:
-                dest.mkdir()
-            # unaffected files of this year re-link byte-identically
-            touched_names = {Path(f).name for f in files}
-            for f in sorted((trash / dest.name).glob("*.parquet")):
-                if f.name not in touched_names:
-                    os.rename(f, dest / f.name)
-            if not any(dest.iterdir()):
-                dest.rmdir()
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash)
-        return n_del
+            return None
+        affected = sorted(unquote(urlparse(r["_file"]).path) for r in per_file)
+        hit: dict[str, set[str]] = {}
+        for f in map(Path, affected):
+            hit.setdefault(item_format.year_of(f.parent), set()).add(f.name)
+        survivors = self._read(path, affected).where(~F.coalesce(pred, F.lit(False)))
+        stage = self._stage(path, survivors)
+        for y, names in hit.items():
+            ydir = stage / item_format.year_dir_name(y)
+            for f in sorted((path / live[y]).glob("*.parquet")):
+                if f.name not in names:
+                    ydir.mkdir(parents=True, exist_ok=True)
+                    os.link(f, ydir / f.name)
+        return _Staged(stage, tuple(hit), sum(int(r["_n"]) for r in per_file))
 
     # -- EXT: cross-section over many items ---------------------------------
 

@@ -183,7 +183,10 @@ def test_uncastable_pandas_raises_schema_error(store, ohlcv_data):
         store["BAD"] = bad
 
 
-def test_uncastable_spark_raises_at_action(store, spark):
+def test_uncastable_spark_raises_at_action(store, mstore, spark):
+    """The guarded cast fails the create at action time under both
+    protocols, and the failed create leaves no key behind: it is not
+    listed, and a valid retry creates it."""
     import pandas as pd
 
     pdf = pd.DataFrame(
@@ -193,8 +196,12 @@ def test_uncastable_spark_raises_at_action(store, spark):
             "VOLUME": ["not_a_number"],
         }
     )
-    with pytest.raises(Exception, match="SchemaError"):
-        store["BAD2"] = spark.createDataFrame(pdf)
+    for s in (store, mstore):
+        with pytest.raises(Exception, match="SchemaError"):
+            s["BAD2"] = spark.createDataFrame(pdf)
+        assert "BAD2" not in s.keys()
+        s["BAD2"] = spark.createDataFrame(pdf.assign(VOLUME=[7]))
+        assert list(s["BAD2"][:]["VOLUME"]) == [7]
 
 
 def test_append_prunes_untouched_partitions(store, tmp_path):
@@ -526,14 +533,14 @@ def test_manifest_append_retries_on_commit_race(mstore, ohlcv_data, monkeypatch)
     real_commit = Store._commit_manifest
     stolen = {"done": False}
 
-    def racing_commit(self, path, version, years):
+    def racing_commit(self, path, version, years, *args, **kwargs):
         if not stolen["done"]:
             stolen["done"] = True
             prev = json.loads(
                 (path / "_manifests" / f"v{version - 1:08d}.json").read_text()
             )["years"]
             real_commit(self, path, version, prev)  # the other writer wins
-        return real_commit(self, path, version, years)
+        return real_commit(self, path, version, years, *args, **kwargs)
 
     monkeypatch.setattr(Store, "_commit_manifest", racing_commit)
     mstore["RA"] += ohlcv_data.head(80)
@@ -619,16 +626,136 @@ def test_vacuum_cleans_crashed_rename_staging(store, ohlcv_data):
     stale_tmp = store._items_path / ".tmp-VC-deadbeef"
     stale_trash = store._items_path / ".trash-VC-deadbeef"
     fresh_tmp = store._items_path / ".tmp-VC-cafebabe"
-    for d in (stale_tmp, stale_trash, fresh_tmp):
+    other_key = store._items_path / ".tmp-VC-X-deadbeef"  # key VC-X's
+    for d in (stale_tmp, stale_trash, fresh_tmp, other_key):
         d.mkdir()
     old = time.time() - 7200
-    os.utime(stale_tmp, (old, old))
-    os.utime(stale_trash, (old, old))
+    for d in (stale_tmp, stale_trash, other_key):
+        os.utime(d, (old, old))
     assert store.vacuum("VC") == 2  # default retention removes only stale
     assert not stale_tmp.exists() and not stale_trash.exists()
     assert fresh_tmp.exists()  # possible in-flight writer: kept
+    assert other_key.exists()  # another key's staging is not VC's
     assert store.vacuum("VC", retention_sec=0) == 1  # offline: fresh too
     assert len(store["VC"][:]) == 10
+
+
+@pytest.mark.parametrize("crash_at", [1, 2])
+@pytest.mark.parametrize("recovery", ["vacuum", "append"])
+def test_rename_swap_cut_short_is_completed(store, monkeypatch, crash_at, recovery):
+    """A rename-protocol publish that crashes before its first rename, or
+    after moving a live year dir out and before moving its replacement
+    in, loses nothing: vacuum completes the journaled swap instead of
+    deleting its staging, and so does the next mutation of the item
+    before it resolves the live years (the caller's retry)."""
+    idx = pd.date_range("2020-06-01", periods=400, freq="D")  # 2020+2021
+    df = pd.DataFrame(
+        {"Open": np.arange(400.0), "High": np.arange(400.0), "Low": np.arange(400.0),
+         "Close": np.arange(400.0), "Volume": np.arange(400)},
+        index=idx,
+    )
+    store["SWP"] = df
+
+    def bar(day, value):
+        return pd.DataFrame(
+            {"Open": [value], "High": [value], "Low": [value], "Close": [value],
+             "Volume": [1]},
+            index=pd.DatetimeIndex([pd.Timestamp(day)]),
+        )
+
+    real_rename = os.rename
+    calls = []
+
+    def rename_crashing(src, dst, *a, **kw):
+        calls.append(src)
+        if len(calls) == crash_at:
+            raise OSError("crash mid-swap")
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", rename_crashing)
+    with pytest.raises(OSError, match="crash mid-swap"):
+        store["SWP"] += bar("2021-12-01", 1.0)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    expected = 401
+    if recovery == "append":
+        store["SWP"] += bar("2021-12-02", 2.0)
+        expected = 402
+    store.vacuum("SWP", retention_sec=0)
+    out = store["SWP"][:]
+    assert len(out) == expected
+    assert out.loc[pd.Timestamp("2021-12-01")]["OPEN"] == 1.0
+    assert store.fsck("SWP")["ok"]
+    assert not list(store._items_path.glob(".*-SWP-*"))
+
+
+def test_finish_swap_refuses_a_year_published_after_its_plan(tmp_path, monkeypatch):
+    """Replaying a half-done swap over a year dir that a later publish put
+    in place would drop that publish's rows: finish_swap raises instead,
+    and the later dir stays live."""
+    from oakstore_spark import item_format
+
+    item, stage = tmp_path / "K", tmp_path / ".tmp-K-0a"
+    (item / "_oak_year=2020").mkdir(parents=True)
+    (stage / "_oak_year=2020").mkdir(parents=True)
+    (stage / "_oak_year=2020" / "staged.parquet").write_text("staged")
+
+    def crash(*a, **kw):
+        raise OSError("crash before the first rename")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="first rename"):
+        item_format.swap_in(item, stage, ["2020"])
+    monkeypatch.undo()
+    # a later publish replaces the year dir the plan saw
+    (item / "_oak_year=2020").rename(tmp_path / "gone")
+    (item / "_oak_year=2020").mkdir()
+    (item / "_oak_year=2020" / "later.parquet").write_text("later")
+    with pytest.raises(RuntimeError, match="replaced after the swap was planned"):
+        item_format.finish_swap(item, stage)
+    assert [f.name for f in (item / "_oak_year=2020").iterdir()] == ["later.parquet"]
+    assert (stage / "_oak_year=2020" / "staged.parquet").exists()
+
+
+@pytest.mark.parametrize("proto", ["rename", "manifest"])
+@pytest.mark.parametrize("op", ["append", "compact", "delete_where"])
+def test_staged_but_unpublished_mutation_is_invisible(
+    tmp_path, spark, ohlcv_data, monkeypatch, proto, op
+):
+    """A mutation that stages its replacement but never publishes it (a
+    crash between the two steps) changes nothing a reader sees, and
+    vacuum returns the store's Parquet bytes to the pre-op total."""
+    import oakstore_spark.store as store_mod
+
+    monkeypatch.setattr(store_mod, "_MAX_RECORDS_PER_FILE", 50)
+    base = tmp_path / proto
+    s = Store(base_path=base, spark=spark, commit_protocol=proto)
+    s["SP"] = ohlcv_data.head(200)
+    pre = s["SP"][:]
+
+    def parquet_bytes():
+        return sum(f.stat().st_size for f in base.rglob("*.parquet"))
+
+    pre_bytes = parquet_bytes()
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(Store, "_publish", crash)
+    mutate = {
+        "append": lambda: s["SP"].__iadd__(ohlcv_data.iloc[150:250]),
+        "compact": lambda: s.compact("SP", min_files_per_partition=0),
+        # hits only the first file: the others are linked into the stage
+        "delete_where": lambda: s.delete_where("SP", f"DATE <= TIMESTAMP '{pre.index[5]}'"),
+    }[op]
+    with pytest.raises(RuntimeError, match="before publish"):
+        mutate()
+    assert parquet_bytes() > pre_bytes  # the replacement was staged
+    pd.testing.assert_frame_equal(s["SP"][:], pre)
+    assert s.fsck("SP")["ok"]
+    s.vacuum("SP", retention_sec=0)
+    assert parquet_bytes() == pre_bytes
+    pd.testing.assert_frame_equal(s["SP"][:], pre)
 
 
 def test_manifest_history_log(mstore, ohlcv_data, monkeypatch):
@@ -1187,7 +1314,7 @@ def test_multi_commit_all_or_nothing_and_recovery(
     # crash AFTER the txn object lands, before the SECOND item's
     # manifest publishes: recovery on the next open applies both
     published = []
-    orig_pub = Store._publish_manifest_for_txn
+    orig_pub = Store._commit_manifest
 
     def crashy_pub(self, path, version, years, operation, txn):
         if len(published) == 1:
@@ -1195,14 +1322,14 @@ def test_multi_commit_all_or_nothing_and_recovery(
         published.append(str(path))
         return orig_pub(self, path, version, years, operation, txn)
 
-    Store._publish_manifest_for_txn = crashy_pub
+    Store._commit_manifest = crashy_pub
     try:
         with pytest.raises(RuntimeError):
             s3.multi_commit(
                 {"CORPUS": ohlcv_data.head(150), "STATS": ohlcv_data.head(30)}
             )
     finally:
-        Store._publish_manifest_for_txn = orig_pub
+        Store._commit_manifest = orig_pub
     # txn object exists; only CORPUS's manifest published so far
     s4 = Store(base, spark=spark, commit_protocol="manifest")  # recovers
     assert len(s4["CORPUS"][:]) == 150 and len(s4["STATS"][:]) == 30
@@ -1300,7 +1427,7 @@ def test_multi_commit_conflict_aborts_not_unopenable(
 
     # txn 2: publish A's manifest, crash before B's
     published = []
-    orig_pub = Store._publish_manifest_for_txn
+    orig_pub = Store._commit_manifest
 
     def crashy_pub(self, path, version, years, operation, txn):
         if len(published) == 1:
@@ -1308,14 +1435,14 @@ def test_multi_commit_conflict_aborts_not_unopenable(
         published.append(str(path))
         return orig_pub(self, path, version, years, operation, txn)
 
-    Store._publish_manifest_for_txn = crashy_pub
+    Store._commit_manifest = crashy_pub
     try:
         with pytest.raises(RuntimeError):
             s.multi_commit(
                 {"A": ohlcv_data.head(80), "B": ohlcv_data.head(90)}
             )
     finally:
-        Store._publish_manifest_for_txn = orig_pub
+        Store._commit_manifest = orig_pub
 
     # the independent writer claims B's next version (the one txn 2
     # staged for) through the normal single-item append path
@@ -1547,27 +1674,41 @@ def test_schema_evolution_rename_datasource_paths(
     """The oakstore DataSource (batch read + CDC stream) applies the
     physical->logical mapping: a renamed column reads under its new
     name from pre-rename files, and the CDC stream's replayed inserts
-    carry it too."""
-    base = tmp_path / "ev_ds"
-    s = Store(base_path=base, spark=spark, commit_protocol="manifest")
-    s["D"] = ohlcv_data.head(30)
-    s.rename_column("CLOSE", "SETTLE")
-
+    carry it too. After a delete_where and a compact, under either
+    protocol, the batch read resolves the same live year dirs as the
+    store's own read."""
     from oakstore_spark.sources.datasource import OakStoreDataSource
 
     spark.dataSource.register(OakStoreDataSource)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    df = (
-        spark.read.format("oakstore")
-        .option("store_path", str(base))
-        .option("key", "D")
-        .load()
-    )
-    assert "SETTLE" in df.columns and "CLOSE" not in df.columns
-    got = df.orderBy("DATE").toPandas()
     truth = ohlcv_data.head(30).sort_index()
-    assert list(got["SETTLE"]) == list(truth["Close"])
+    cut = float(sorted(truth["Volume"])[10])
+    kept = truth[truth["Volume"] > cut]
+    for proto in ("rename", "manifest"):
+        base = tmp_path / f"ev_ds_{proto}"
+        s = Store(base_path=base, spark=spark, commit_protocol=proto)
+        s["D"] = ohlcv_data.head(30)
+        s.rename_column("CLOSE", "SETTLE")
 
+        def load():
+            return (
+                spark.read.format("oakstore")
+                .option("store_path", str(base))
+                .option("key", "D")
+                .load()
+            )
+
+        assert "SETTLE" in load().columns and "CLOSE" not in load().columns
+        got = load().orderBy("DATE").toPandas()
+        assert list(got["SETTLE"]) == list(truth["Close"])
+
+        assert s.delete_where("D", f"VOLUME <= {cut}") == len(truth) - len(kept)
+        assert s.compact("D", min_files_per_partition=0) == 1
+        got = load().orderBy("DATE").toPandas()
+        assert list(got["SETTLE"]) == list(kept["Close"])
+        assert list(got["VOLUME"]) == list(s["D"][:]["VOLUME"])
+
+    base = tmp_path / "ev_ds_manifest"
     out_dir = tmp_path / "cdc_out"
     q = (
         spark.readStream.format("oakstore")
@@ -1583,7 +1724,7 @@ def test_schema_evolution_rename_datasource_paths(
     q.awaitTermination(120)
     cdc = spark.read.parquet(str(out_dir)).orderBy("DATE").toPandas()
     assert "SETTLE" in cdc.columns
-    assert list(cdc["SETTLE"]) == list(truth["Close"])
+    assert list(cdc["SETTLE"]) == list(kept["Close"])
 
 
 def test_multi_commit_delete_and_compact_moves(
@@ -1663,7 +1804,7 @@ def test_multi_commit_delete_and_compact_moves(
 
     # crash mid fan-out AFTER the commit point: recovery applies BOTH
     published = []
-    orig_pub = Store._publish_manifest_for_txn
+    orig_pub = Store._commit_manifest
 
     def crashy(self, path, version, years, operation, txn):
         if len(published) == 1:
@@ -1671,7 +1812,7 @@ def test_multi_commit_delete_and_compact_moves(
         published.append(operation)
         return orig_pub(self, path, version, years, operation, txn)
 
-    Store._publish_manifest_for_txn = crashy
+    Store._commit_manifest = crashy
     try:
         with pytest.raises(RuntimeError):
             s2.multi_commit({
@@ -1680,7 +1821,7 @@ def test_multi_commit_delete_and_compact_moves(
                 "IDX": ohlcv_data.iloc[100:110],
             })
     finally:
-        Store._publish_manifest_for_txn = orig_pub
+        Store._commit_manifest = orig_pub
     s3 = Store(base, spark=spark, commit_protocol="manifest")  # recovers
     assert len(s3["CORPUS"][:]) == 0  # delete applied by roll-forward
     # 90 + the mid-fan-out txn's 10 rows; the pre-commit-crash batch
